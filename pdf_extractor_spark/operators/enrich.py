@@ -122,23 +122,36 @@ def split_documents(multiplexed: DataFrame) -> DataFrame:
     )
 
 
+def lineage_exprs() -> list[F.Column]:
+    """The per-batch counters (north rule: turns in/out, bytes parsed,
+    parse failures) as aggregate columns over the multiplexed rows:
+    document counters read sentinel rows, output counters read chunk
+    rows.  One definition serves ``batch_lineage`` (an aggregate over
+    committed rows) and the sink's in-write ``observe`` (plans/sinks.py),
+    so both spellings agree by construction."""
+    sentinel = F.col("chunk_index") == SENTINEL_INDEX
+    chunk = F.col("chunk_index") != SENTINEL_INDEX
+
+    def doc(c: F.Column) -> F.Column:
+        return F.when(sentinel, c)
+
+    return [
+        F.count(doc(F.lit(1))).alias("convs"),
+        F.sum(doc(F.col("num_turns"))).alias("turns_in"),
+        F.sum(doc(F.col("bytes_in"))).alias("bytes_in"),
+        F.sum(doc(F.col("parse_failures"))).alias("parse_failures"),
+        F.sum(doc(F.col("struct_warnings"))).alias("struct_warnings"),
+        F.sum(doc((F.col("status") != "embedded").cast("int"))).alias(
+            "convs_rejected"
+        ),
+        F.count(F.when(chunk, F.lit(1))).alias("chunks_out"),
+        F.sum(F.when(chunk, F.col("char_count"))).alias("chars_out"),
+    ]
+
+
 def batch_lineage(multiplexed: DataFrame) -> DataFrame:
-    """Counter roll-up for one batch (north rule: turns in/out, bytes
-    parsed, parse failures) — computed from sentinel rows, so the counters
-    are exactly-once per committed batch like the reference's verified
-    ``affected_rows`` (api.py:1417-1445)."""
-    sentinels = multiplexed.where(F.col("chunk_index") == SENTINEL_INDEX)
-    chunk_rows = multiplexed.where(F.col("chunk_index") != SENTINEL_INDEX)
-    a = sentinels.agg(
-        F.count("*").alias("convs"),
-        F.sum("num_turns").alias("turns_in"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("parse_failures").alias("parse_failures"),
-        F.sum("struct_warnings").alias("struct_warnings"),
-        F.sum((F.col("status") != "embedded").cast("int")).alias("convs_rejected"),
-    )
-    b = chunk_rows.agg(
-        F.count("*").alias("chunks_out"),
-        F.sum("char_count").alias("chars_out"),
-    )
-    return a.crossJoin(b)
+    """Counter roll-up for one batch, one row (see ``lineage_exprs``) —
+    computed from sentinel rows, so the counters are exactly-once per
+    committed batch like the reference's verified ``affected_rows``
+    (api.py:1417-1445)."""
+    return multiplexed.agg(*lineage_exprs())

@@ -6,7 +6,19 @@ Topology (SURVEY.md §7.1):
       Stage 1  extract_turns        pandas UDF, embarrassingly parallel
       Stage 2  chunk_conversations  ONE shuffle: groupBy(conv_id), multiplexed
       Stage 3  add_embeddings       pandas UDF on chunk rows (pre-commit)
-      commit   Sink.commit(batch)                    (atomic per batch)
+      commit   Sink.commit(batch)   write + observed counters (atomic per batch)
+
+Per batch that is two Spark jobs (AQE runs each shuffle-map stage as its
+own job, so ``salt_stage1``'s repartition adds a third): the stage-1
+shuffle-map job (one task per scan partition) and the write job, whose
+result stage runs stages 2 and 3, the counters' ``observe`` and the
+parquet write.  AQE coalesces the small stage-2 shuffle to ONE
+partition, so the write job is a single task that leaves the other
+cores idle.  ``run_extraction`` therefore keeps two batches in flight
+(double-buffering): while batch k runs its single-task write job, batch
+k+1 runs its stage-1 job on the idle cores.  Splitting stage 2 into more
+tasks instead is slower — its Python group functions pay a fixed cost
+per task and per group.
 
 The commit protocol lives behind the ``Sink`` protocol (plans/sinks.py):
 ``ParquetManifestSink`` (stage → rename → manifest; the local analog of an
@@ -26,8 +38,11 @@ salt)) pattern for inputs whose file layout clusters giant conversations.
 
 from __future__ import annotations
 
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from itertools import islice
 from typing import Any, Optional
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,7 +108,14 @@ def run_extraction(
     multi-executor work split: each executor process owns a disjoint bucket
     range and commits into the SAME sink (batch ids are bucket-derived, so
     ranges never collide; the commit protocol makes the shared sink safe).
-    Returns a summary dict with per-batch manifests and totals.
+    Returns a summary dict with per-batch manifests (in batch-id order) and
+    totals.
+
+    Two batches are in flight at once (see the module doc), each committed
+    on a worker thread that keeps the caller's Spark local properties (job
+    group, description, scheduler pool) and session tags.  When a batch
+    raises, no further batch starts; the batch still in flight finishes its
+    atomic commit and the first error is re-raised.
     """
     if sink is None:
         if output_root is None:
@@ -108,24 +130,55 @@ def run_extraction(
         for i in range(0, len(all_buckets), buckets_per_batch)
     ]
 
-    manifests = []
-    executed = 0
-    for batch_buckets in batches:
+    by_index: dict[int, dict[str, Any]] = {}
+    pending: list[tuple[int, str, list[int]]] = []
+    for i, batch_buckets in enumerate(batches):
         batch_id = f"{batch_buckets[0]:04d}"
         if batch_id in done:
-            manifests.append(done[batch_id])
-            continue
-        if fail_after_batches is not None and executed >= fail_after_batches:
-            raise RuntimeError(
-                f"simulated kill after {executed} batches (resume test)"
-            )
+            by_index[i] = done[batch_id]
+        else:
+            pending.append((i, batch_id, batch_buckets))
+    killed = fail_after_batches is not None and len(pending) > fail_after_batches
+    if killed:
+        pending = pending[:fail_after_batches]
+
+    def commit_batch(batch_id: str, batch_buckets: list[int]) -> dict[str, Any]:
         sub = transcripts.where(bucket_col(buckets).isin(batch_buckets))
         multiplexed = build_multiplexed(
             sub, salt_stage1=salt_stage1, packed_embeddings=packed_embeddings
         )
-        manifests.append(sink.commit(multiplexed, batch_id, batch_buckets))
-        executed += 1
+        return sink.commit(multiplexed, batch_id, batch_buckets)
 
+    in_flight = 2
+    queue = iter(pending)
+    running: dict[Future, int] = {}
+    error: Optional[BaseException] = None
+    with ThreadPoolExecutor(in_flight, thread_name_prefix="batch-commit") as pool:
+        while True:
+            room = in_flight - len(running) if error is None else 0
+            for i, batch_id, batch_buckets in islice(queue, room):
+                # wrapped per batch: each commit gets its own copy of the
+                # caller's local properties, because Spark writes the SQL
+                # execution id into them while a query runs
+                target = inheritable_thread_target(spark)(commit_batch)
+                running[pool.submit(target, batch_id, batch_buckets)] = i
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                i = running.pop(fut)
+                try:
+                    by_index[i] = fut.result()
+                except BaseException as e:
+                    if error is None:
+                        error = e
+    if error is not None:
+        raise error
+    executed = len(pending)
+    if killed:
+        raise RuntimeError(f"simulated kill after {executed} batches (resume test)")
+
+    manifests = [by_index[i] for i in sorted(by_index)]
     totals: dict[str, int] = {}
     for m in manifests:
         for k, v in m["counters"].items():

@@ -8,7 +8,9 @@ The reference's sink contract is a bulk insert with verified
 * ``ParquetManifestSink`` — the local-filesystem analog of an Iceberg
   snapshot append: stage → rename → manifest; a batch without a manifest
   is invisible and is redone wholesale on resume (used everywhere
-  in-sandbox).
+  in-sandbox).  Its counters are observed in the write job itself
+  (``DataFrame.observe`` over ``operators.enrich.lineage_exprs``), so a
+  commit is one Spark job with no read-back of the committed parquet.
 * ``IcebergSink`` — the production path: one atomic
   ``writeTo(table).append()`` per batch, counts verified against the
   snapshot summary's ``added-records``, and a checkpoint row per batch in
@@ -18,7 +20,9 @@ The reference's sink contract is a bulk insert with verified
   without one raises immediately rather than failing mid-run.
 
 Both implement the same three-method surface, so ``run_extraction`` and
-the resume/lineage logic are sink-agnostic.
+the resume/lineage logic are sink-agnostic.  ``run_extraction`` keeps two
+batches in flight, so ``commit`` is called from two threads at once, on
+disjoint batch ids; an implementation must be safe under that.
 """
 
 from __future__ import annotations
@@ -26,11 +30,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+import uuid
 from typing import Any, Protocol, runtime_checkable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.enrich import batch_lineage, lineage_exprs
 
 _BATCH_DIR = "batches"
 _CKPT_DIR = "_checkpoints"
@@ -48,7 +56,8 @@ class Sink(Protocol):
         self, multiplexed: DataFrame, batch_id: str, bucket_ids: list[int]
     ) -> dict[str, Any]:
         """Atomically persist one batch; returns its manifest (with
-        exactly-once counters computed from the committed data)."""
+        exactly-once counters of the committed rows).  Called from up to
+        two threads at once, never twice for one batch id."""
         ...
 
     def read_multiplexed(self, spark: SparkSession) -> DataFrame:
@@ -56,11 +65,12 @@ class Sink(Protocol):
         ...
 
 
-def _batch_counters(written: DataFrame) -> dict[str, int]:
-    from ..operators.enrich import batch_lineage
-
-    row = batch_lineage(written).collect()[0].asDict()
+def _as_counters(row: dict[str, Any]) -> dict[str, int]:
     return {k: (int(v) if v is not None else 0) for k, v in row.items()}
+
+
+def _batch_counters(written: DataFrame) -> dict[str, int]:
+    return _as_counters(batch_lineage(written).collect()[0].asDict())
 
 
 class ParquetManifestSink:
@@ -93,7 +103,6 @@ class ParquetManifestSink:
     def commit(
         self, multiplexed: DataFrame, batch_id: str, bucket_ids: list[int]
     ) -> dict[str, Any]:
-        spark = multiplexed.sparkSession
         final = self._data_path(batch_id)
         staging = final + ".staging"
         if os.path.exists(staging):
@@ -101,19 +110,26 @@ class ParquetManifestSink:
         if os.path.exists(final):
             shutil.rmtree(final)  # uncommitted leftovers from a killed run
 
+        # counters of the *written* rows, observed by the write job itself:
+        # the CollectMetrics node sits in the job's result stage, directly
+        # under the write, and Spark applies a result task's accumulator
+        # update once per partition — exactly-once, like the reference's
+        # verified affected_rows (api.py:1417-1445), with no read-back
+        obs = Observation(f"lineage_{batch_id}_{uuid.uuid4().hex}")
         t0 = time.time()
-        multiplexed.write.mode("overwrite").parquet(staging)
+        multiplexed.observe(obs, *lineage_exprs()).write.mode("overwrite").parquet(
+            staging
+        )
+        counters = _as_counters(obs.get)
         os.makedirs(os.path.dirname(final), exist_ok=True)
         os.rename(staging, final)
 
-        # counters from the *written* data — exactly-once, like the
-        # reference's verified affected_rows (api.py:1417-1445)
         manifest = {
             "batch_id": batch_id,
             "buckets": bucket_ids,
             "path": final,
             "elapsed_sec": round(time.time() - t0, 3),
-            "counters": _batch_counters(spark.read.parquet(final)),
+            "counters": counters,
         }
         os.makedirs(os.path.join(self.root, _CKPT_DIR), exist_ok=True)
         tmp = self._manifest_path(batch_id) + ".tmp"
@@ -149,7 +165,9 @@ class IcebergSink:
     the manifest JSON).  Commit sequence per batch:
 
     1. first-ever commit CREATES the data table from the batch schema
-       (``writeTo(...).using('iceberg').create()``); otherwise
+       (``writeTo(...).using('iceberg').create()``) — decided, created and
+       verified under a per-sink lock, so of two batches in flight on a
+       fresh catalog exactly one creates and the other appends; otherwise
        ``DELETE FROM table WHERE batch_id = X``  (idempotence: a crash
        after append but before the checkpoint row leaves orphan rows; the
        redo wipes them before re-appending)
@@ -176,6 +194,7 @@ class IcebergSink:
         self.spark = spark
         self.table = table
         self.ckpt_table = table + "_checkpoints"
+        self._create_lock = threading.Lock()
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {self.ckpt_table} "
             "(batch_id STRING, buckets STRING, snapshot_id BIGINT, "
@@ -204,42 +223,24 @@ class IcebergSink:
         writer = stamped.writeTo(self.table).option(
             f"snapshot-property.{self._SNAP_PROP}", batch_id
         )
-        created_here = False
-        if spark.catalog.tableExists(self.table):
+        # the create-or-append decision is re-checked under the lock: two
+        # batches in flight on a fresh catalog would otherwise both see no
+        # table and both create().  The winner also finds its snapshot
+        # under the lock, so the loser's append cannot reach the snapshot
+        # log before the create branch's sole-snapshot fallback reads it.
+        with self._create_lock:
+            created_here = not spark.catalog.tableExists(self.table)
+            if created_here:
+                # very first commit: create the data table from the batch
+                # schema (a DELETE-first sequence would die on a fresh catalog)
+                writer.using("iceberg").create()
+                snap = self._own_snapshot(batch_id, created_here=True)
+        if not created_here:
             # 1. idempotence: wipe any orphan rows from a crashed attempt
             spark.sql(f"DELETE FROM {self.table} WHERE batch_id = '{batch_id}'")
             # 2. one atomic snapshot append
             writer.append()
-        else:
-            # very first commit: create the data table from the batch schema
-            # (a DELETE-first sequence would die on a fresh catalog)
-            writer.using("iceberg").create()
-            created_here = True
-
-        # 3. snapshot verification against OUR OWN commit, found by the
-        # batch_id stamped into the snapshot summary — never the global
-        # latest, which a concurrent disjoint-bucket driver may own; a
-        # replayed batch takes its newest stamped snapshot
-        snap = spark.sql(
-            f"SELECT snapshot_id, summary FROM {self.table}.snapshots "
-            f"WHERE summary['{self._SNAP_PROP}'] = '{batch_id}' "
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).first()
-        if snap is None and created_here:
-            # CTAS fallback: some catalogs record writer options of a
-            # create() as TABLE properties rather than snapshot-summary
-            # entries, so the stamped lookup can come back empty on the
-            # very first commit.  We just created this table in this call,
-            # so its snapshot log has exactly ONE entry and it is ours —
-            # verify that one instead (safe only on the create branch:
-            # no concurrent driver can own a snapshot of a table that did
-            # not exist a moment ago).
-            snaps = spark.sql(
-                f"SELECT snapshot_id, summary FROM {self.table}.snapshots "
-                "ORDER BY committed_at DESC"
-            ).collect()
-            if len(snaps) == 1:
-                snap = snaps[0]
+            snap = self._own_snapshot(batch_id, created_here=False)
         if snap is None:
             raise RuntimeError(
                 f"no snapshot stamped {self._SNAP_PROP}={batch_id} found "
@@ -273,6 +274,33 @@ class IcebergSink:
             self.ckpt_table
         ).append()
         return manifest
+
+    def _own_snapshot(self, batch_id: str, created_here: bool):
+        """3. the snapshot of OUR OWN commit, found by the batch_id stamped
+        into the snapshot summary — never the global latest, which a
+        concurrent disjoint-bucket driver may own; a replayed batch takes
+        its newest stamped snapshot.  None when there is no such snapshot."""
+        snap = self.spark.sql(
+            f"SELECT snapshot_id, summary FROM {self.table}.snapshots "
+            f"WHERE summary['{self._SNAP_PROP}'] = '{batch_id}' "
+            "ORDER BY committed_at DESC LIMIT 1"
+        ).first()
+        if snap is None and created_here:
+            # CTAS fallback: some catalogs record writer options of a
+            # create() as TABLE properties rather than snapshot-summary
+            # entries, so the stamped lookup can come back empty on the
+            # very first commit.  We just created this table in this call,
+            # so its snapshot log has exactly ONE entry and it is ours —
+            # verify that one instead (safe only on the create branch:
+            # no concurrent driver can own a snapshot of a table that did
+            # not exist a moment ago).
+            snaps = self.spark.sql(
+                f"SELECT snapshot_id, summary FROM {self.table}.snapshots "
+                "ORDER BY committed_at DESC"
+            ).collect()
+            if len(snaps) == 1:
+                snap = snaps[0]
+        return snap
 
     def read_multiplexed(self, spark: SparkSession) -> DataFrame:
         committed_ids = list(self.committed())

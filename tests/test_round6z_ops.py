@@ -113,6 +113,32 @@ def test_scd2_interval_contiguity(spark, tmp_path):
             assert a["version"] + 1 == b["version"]
 
 
+
+def test_scd2_same_ts_changes_tie_break_on_event_id_both_engines(spark, tmp_path):
+    """User 1 changes state twice at one ts (view -> click -> purchase,
+    the last two at 09:05): event_id orders them, so both engines give
+    the same versions and boundaries."""
+    import duckdb
+
+    from pdf_extractor_spark.queries import ORACLE_SCD2_USER_STATE
+
+    base = datetime.datetime(2024, 3, 4, 9, 0)
+    tie = base + datetime.timedelta(minutes=5)
+    ev = [(1, 1, "view", base), (3, 1, "purchase", tie), (2, 1, "click", tie),
+          (4, 1, "purchase", base + datetime.timedelta(minutes=9)),
+          (5, 2, "view", base), (6, 2, "click", tie)]
+    _write_events(spark, tmp_path, ev)
+    got = [tuple(r) for r in q_scd2_user_state(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.sql("CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet/*.parquet')")
+    want = [tuple(r) for r in con.sql(ORACLE_SCD2_USER_STATE).fetchall()]
+    assert got == want == _scd2_ref(ev)
+    t = int(tie.timestamp())
+    assert got[:3] == [(1, "view", int(base.timestamp()), t, 1, 0),
+                       (1, "click", t, t, 2, 0),
+                       (1, "purchase", t, None, 3, 1)]
+
 # ---------------------------------------------------- completeness grid
 
 

@@ -111,6 +111,30 @@ def test_its_no_break(spark, tmp_path):
     assert r["verdict"] == "no_break_detected"
 
 
+
+def test_its_five_days_or_fewer_is_degenerate_on_both_engines(spark, tmp_path):
+    """5 days split 2 + 3: the first segment has no residual variance
+    (m - 2 = 0); 2 days split 1 + 1 has Sxx = 0 as well.  Both engines
+    return NULL estimates and the 'degenerate' verdict, never a
+    divide-by-zero."""
+    import duckdb
+
+    from pdf_extractor_spark.queries import ORACLE_ITS_KNOWN_BREAK
+
+    for counts in ([5, 9, 4, 12, 7], [3, 8]):
+        _write_day_counts(spark, tmp_path, counts)
+        got = q_its_known_break(spark, str(tmp_path)).collect()
+        con = duckdb.connect()
+        con.sql("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet/*.parquet')")
+        want = con.sql(ORACLE_ITS_KNOWN_BREAK).fetchall()
+        assert len(got) == 1 and len(want) == 1
+        r = got[0]
+        assert r["n_days"] == len(counts)
+        assert r["verdict"] == "degenerate"
+        assert r["slope_change_lo95"] is None and r["level_jump_lo95"] is None
+        assert tuple(r) == tuple(want[0])
+
 # ---------------------------------------------------------------- Gwet AC1
 
 

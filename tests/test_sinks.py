@@ -294,3 +294,63 @@ def test_iceberg_append_branch_never_uses_sole_snapshot_fallback(monkeypatch):
     # the fallback (unstamped) snapshot query never ran
     assert not any(".snapshots" in q and "WHERE summary[" not in q
                    for q in sess.sql_log)
+
+
+def test_iceberg_concurrent_commits_on_fresh_catalog_create_once(monkeypatch):
+    """Two batches in flight on a fresh catalog: the create-or-append
+    decision is re-checked under the sink's lock, so exactly one commit
+    creates the data table and the other takes the DELETE + append path."""
+    import threading
+    import time
+
+    sess = _FakeSession(existing_tables=set(),
+                        snap_summary={"added-records": "3"})
+    existing = sess.catalog._existing
+
+    class _SlowCreateWriter(_FakeWriter):
+        def create(self):
+            time.sleep(0.2)  # widen the window between the check and create
+            super().create()
+            existing.add(self.table)
+
+    class _DF(_FakeDF):
+        def writeTo(self, table):
+            return _SlowCreateWriter(self.log, table)
+
+    sink = _mk_iceberg_sink(monkeypatch, sess)
+    start = threading.Barrier(2)
+    errors: list[BaseException] = []
+
+    def commit(batch_id):
+        start.wait()
+        try:
+            sink.commit(_DF(sess.write_log, 3), batch_id, [0])
+        except BaseException as e:  # pragma: no cover - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=commit, args=(b,)) for b in ("b0", "b1")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    data_writes = sorted(k for k, table, _ in sess.write_log if table == "cat.db.chunks")
+    assert data_writes == ["append", "create"]
+    deletes = [q for q in sess.sql_log if q.startswith("DELETE FROM cat.db.chunks ")]
+    assert len(deletes) == 1
+
+
+def test_observed_counters_of_an_empty_batch_are_zero(spark, tmp_path):
+    """A batch whose buckets hold no conversation still commits, with
+    all-zero observed counters equal to the read-back of its empty parquet."""
+    from pdf_extractor_spark.operators.enrich import batch_lineage
+
+    tx = transcripts_spark_df(spark, 1, seed=42)
+    res = run_extraction(spark, tx, str(tmp_path / "out"),
+                         buckets=2, buckets_per_batch=1)
+    assert res["executed_now"] == 2
+    (empty,) = [m for m in res["batches"] if m["counters"]["convs"] == 0]
+    want = batch_lineage(spark.read.parquet(empty["path"])).first().asDict()
+    assert empty["counters"] == {k: int(v or 0) for k, v in want.items()}
+    assert set(empty["counters"].values()) == {0}

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import pathlib
+import threading
 
 import pytest
 
@@ -34,6 +35,7 @@ CHUNK_COLS = (
     "chapters", "char_count", "start_turn", "end_turn",
 )
 DOC_COLS = ("conv_id", "title", "num_turns", "chunk_count", "status")
+PIPELINE_DESCRIPTION = "golden pipeline run"
 
 
 def _golden(name):
@@ -50,7 +52,13 @@ def transcripts(spark):
 @pytest.fixture(scope="module")
 def pipeline_output(spark, transcripts, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pipeline"))
-    summary = run_extraction(spark, transcripts, root, buckets=8, buckets_per_batch=4)
+    # the description tags this run's SQL executions (the commit threads
+    # inherit it) for the plan test in TestLineage
+    spark.sparkContext.setJobDescription(PIPELINE_DESCRIPTION)
+    try:
+        summary = run_extraction(spark, transcripts, root, buckets=8, buckets_per_batch=4)
+    finally:
+        spark.sparkContext.setJobDescription(None)
     return root, summary
 
 
@@ -121,6 +129,63 @@ class TestLineage:
         lineage = read_lineage(spark, root)
         assert lineage.count() == len(summary["batches"])
 
+    def test_observed_counters_equal_batch_lineage_of_committed_rows(
+        self, spark, pipeline_output
+    ):
+        """The manifest counters, observed by the write job, equal
+        batch_lineage over the committed parquet — on a corpus with an XSS
+        conversation and HTML turns."""
+        from pdf_extractor_spark.operators.enrich import batch_lineage
+
+        _, summary = pipeline_output
+        assert summary["totals"]["convs_rejected"] >= 1
+        for m in summary["batches"]:
+            want = batch_lineage(spark.read.parquet(m["path"])).first().asDict()
+            want = {k: int(v or 0) for k, v in want.items()}
+            assert list(m["counters"]) == list(want)  # same keys, same order
+            assert m["counters"] == want, m["batch_id"]
+
+    def test_collect_metrics_sits_in_the_write_result_stage(
+        self, spark, pipeline_output
+    ):
+        """Exactly-once counters: the observe's CollectMetrics node must sit
+        in the write job's RESULT stage — no Exchange between it and the
+        write — because Spark applies a result task's accumulator update
+        once per partition (a shuffle-map stage's may be applied again when
+        a stage is re-run)."""
+        _, summary = pipeline_output
+        trees = _final_write_plans(spark, PIPELINE_DESCRIPTION, len(summary["batches"]))
+        for tree in trees:
+            lines = [ln for ln in tree.splitlines() if ln.strip()]
+            metrics = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
+            shuffles = [i for i, ln in enumerate(lines) if any(
+                k in ln for k in ("Exchange", "ShuffleQueryStage", "AQEShuffleRead"))]
+            assert len(metrics) == 1, tree
+            assert shuffles, tree  # the stage-2 shuffle, below the metrics
+            # a plan tree prints a parent above its children: every shuffle
+            # node is below CollectMetrics, none between it and the write
+            assert min(shuffles) > metrics[0], tree
+
+
+def _final_write_plans(spark, description, n):
+    """Final (post-AQE) plan trees of the ``n`` parquet writes run under
+    the SQL execution ``description``, from the SQL status store; the
+    listener bus fills the store asynchronously, so poll."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    for _ in range(100):
+        execs = store.executionsList()
+        plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+                 if execs.apply(i).description() == description]
+        trees = [p.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+                 for p in plans
+                 if "InsertIntoHadoopFsRelationCommand" in p and "== Final Plan ==" in p]
+        if len(trees) == n:
+            return trees
+        time.sleep(0.1)
+    raise AssertionError(f"{len(trees)} final write plans under {description!r}, want {n}")
+
 
 class TestResume:
     def test_kill_and_resume_no_duplicates(self, spark, transcripts, tmp_path):
@@ -173,6 +238,92 @@ class TestResume:
         # a whole-range pass over the same root finds everything committed
         s3 = run_extraction(spark, transcripts, root, buckets=8, buckets_per_batch=2)
         assert s3["executed_now"] == 0
+
+
+class _CountingSink:
+    """ParquetManifestSink proxy recording the order commits start and
+    finish in.  ``fail_call=n``: the n-th commit call raises at once.
+    ``wait_for=(a, b)``: batch a's commit waits until batch b committed."""
+
+    def __init__(self, root, fail_call=None, wait_for=None):
+        from pdf_extractor_spark.plans.sinks import ParquetManifestSink
+
+        self.inner = ParquetManifestSink(root)
+        self.fail_call, self.wait_for = fail_call, wait_for or (None, None)
+        self.started, self.finished = [], []
+        self.local_props = []
+        self._lock = threading.Lock()
+        self._released = threading.Event()
+
+    def committed(self):
+        return self.inner.committed()
+
+    def commit(self, multiplexed, batch_id, bucket_ids):
+        with self._lock:
+            self.started.append(batch_id)
+            call = len(self.started)
+        self.local_props.append(
+            multiplexed.sparkSession.sparkContext.getLocalProperty("test.caller")
+        )
+        if call == self.fail_call:
+            raise RuntimeError(f"injected commit failure on batch {batch_id}")
+        if batch_id == self.wait_for[0]:
+            self._released.wait(timeout=60)
+        manifest = self.inner.commit(multiplexed, batch_id, bucket_ids)
+        with self._lock:
+            self.finished.append(batch_id)
+        if batch_id == self.wait_for[1]:
+            self._released.set()
+        return manifest
+
+    def read_multiplexed(self, spark):
+        return self.inner.read_multiplexed(spark)
+
+
+class TestPipelinedCommits:
+    """run_extraction keeps two batches in flight; these pin what that
+    must not change: errors, resume and the order of the result."""
+
+    def test_failed_commit_propagates_starts_nothing_more_and_resumes(
+        self, spark, transcripts, tmp_path
+    ):
+        from pdf_extractor_spark.plans.pipeline import committed_batches
+
+        root = str(tmp_path / "fail")
+        sink = _CountingSink(root, fail_call=2)
+        with pytest.raises(RuntimeError, match="injected commit failure"):
+            run_extraction(spark, transcripts, sink=sink,
+                           buckets=8, buckets_per_batch=2)
+        # the second commit raised at once, while the first was in flight:
+        # that one finished its atomic commit, and no third batch started
+        assert len(sink.started) == 2
+        assert len(sink.finished) == 1
+        assert list(committed_batches(root)) == sink.finished
+
+        summary = run_extraction(spark, transcripts, root,
+                                 buckets=8, buckets_per_batch=2)
+        assert summary["executed_now"] == 3
+        got = _rows_as_dicts(read_chunks(spark, root), CHUNK_COLS)
+        want = _golden_as_lists(_golden("chunks"), CHUNK_COLS)
+        assert got == want  # byte-identical, no dups, nothing missing
+
+    def test_out_of_order_commits_return_batches_in_id_order(
+        self, spark, transcripts, tmp_path
+    ):
+        # batch 0000 waits until batch 0004 has committed, so they finish
+        # out of order; the worker threads keep the caller's local properties
+        sink = _CountingSink(str(tmp_path / "ooo"), wait_for=("0000", "0004"))
+        sc = spark.sparkContext
+        sc.setLocalProperty("test.caller", "pipelined")
+        try:
+            summary = run_extraction(spark, transcripts, sink=sink,
+                                     buckets=8, buckets_per_batch=4)
+        finally:
+            sc.setLocalProperty("test.caller", None)
+        assert sink.finished == ["0004", "0000"]
+        assert [m["batch_id"] for m in summary["batches"]] == ["0000", "0004"]
+        assert sink.local_props == ["pipelined"] * 2
+        assert summary["totals"]["convs"] == GOLDEN_CONVS
 
 
 class TestTitlePrecedence:
