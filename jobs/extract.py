@@ -16,9 +16,9 @@ Local smoke (this sandbox):
     python jobs/extract.py --generate 100 --output /tmp/extract_run
 
 The job is resumable: re-running with the same --output skips committed
-batches (plans/pipeline.py checkpoint protocol).  ``--kill-after`` exists
-to demo that: run with it, watch the failure, re-run without it and only
-the remaining batches execute.
+batches (plans/pipeline.py checkpoint protocol).  To see it, kill the
+process mid-run and re-run the same command: only the batches that had not
+committed execute (``executed_now`` in the printed summary).
 """
 
 from __future__ import annotations
@@ -45,8 +45,6 @@ def main() -> int:
     ap.add_argument("--buckets-per-batch", type=int, default=4)
     ap.add_argument("--salt-stage1", action="store_true",
                     help="salt extraction stage for skewed conversations")
-    ap.add_argument("--kill-after", type=int, default=None,
-                    help="simulate a killed run after N batches (resume demo)")
     ap.add_argument("--cores", type=int, default=None,
                     help="local[] cores when no cluster master is set")
     ap.add_argument("--iceberg-table", default=None,
@@ -93,7 +91,6 @@ def main() -> int:
         buckets=args.buckets or CHECKPOINT_BUCKETS,
         buckets_per_batch=args.buckets_per_batch,
         salt_stage1=args.salt_stage1,
-        fail_after_batches=args.kill_after,
         sink=sink,
         packed_embeddings=args.packed_embeddings or None,
     )

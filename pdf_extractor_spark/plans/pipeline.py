@@ -65,7 +65,6 @@ def committed_batches(root: str) -> dict[str, dict[str, Any]]:
 def build_multiplexed(
     transcripts: DataFrame,
     salt_stage1: bool = False,
-    salt: int = SALT_BUCKETS,
     packed_embeddings: Optional[bool] = None,
 ) -> DataFrame:
     """The logical plan: stage 1 → stage 2 → stage 3 (no IO).
@@ -77,10 +76,10 @@ def build_multiplexed(
     src = transcripts
     if salt_stage1:
         # spread any pathological file layout before the Python stage;
-        # the salt keys on (conv_id, turn_idx % salt) so one giant
-        # conversation fans out across `salt` partitions for extraction
+        # the salt keys on (conv_id, turn_idx % SALT_BUCKETS) so one giant
+        # conversation fans out across that many partitions for extraction
         src = src.repartition(
-            F.xxhash64("conv_id", F.pmod(F.col("turn_idx"), F.lit(salt)))
+            F.xxhash64("conv_id", F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)))
         )
     extracted = extract_turns(src, with_first_extract=True)
     multiplexed = chunk_conversations(extracted)
@@ -94,7 +93,6 @@ def run_extraction(
     buckets: int = CHECKPOINT_BUCKETS,
     buckets_per_batch: int = 4,
     salt_stage1: bool = False,
-    fail_after_batches: Optional[int] = None,
     bucket_range: Optional[tuple[int, int]] = None,
     sink: Optional[Sink] = None,
     packed_embeddings: Optional[bool] = None,
@@ -103,13 +101,14 @@ def run_extraction(
 
     ``sink`` defaults to ``ParquetManifestSink(output_root)``; pass an
     ``IcebergSink`` on a cluster with a catalog.
-    ``fail_after_batches`` simulates a killed run for the resume tests.
     ``bucket_range=(lo, hi)`` restricts this run to buckets lo..hi-1 — the
     multi-executor work split: each executor process owns a disjoint bucket
     range and commits into the SAME sink (batch ids are bucket-derived, so
     ranges never collide; the commit protocol makes the shared sink safe).
-    Returns a summary dict with per-batch manifests (in batch-id order) and
-    totals.
+    Returns a summary dict with per-batch manifests (in batch-id order),
+    totals, and ``executed_now``: the batches this call committed (0 on a
+    re-run over a fully committed sink).  A killed or failed run resumes by
+    running it again: committed batches are skipped.
 
     Two batches are in flight at once (see the module doc), each committed
     on a worker thread that keeps the caller's Spark local properties (job
@@ -138,9 +137,6 @@ def run_extraction(
             by_index[i] = done[batch_id]
         else:
             pending.append((i, batch_id, batch_buckets))
-    killed = fail_after_batches is not None and len(pending) > fail_after_batches
-    if killed:
-        pending = pending[:fail_after_batches]
 
     def commit_batch(batch_id: str, batch_buckets: list[int]) -> dict[str, Any]:
         sub = transcripts.where(bucket_col(buckets).isin(batch_buckets))
@@ -174,16 +170,13 @@ def run_extraction(
                         error = e
     if error is not None:
         raise error
-    executed = len(pending)
-    if killed:
-        raise RuntimeError(f"simulated kill after {executed} batches (resume test)")
 
     manifests = [by_index[i] for i in sorted(by_index)]
     totals: dict[str, int] = {}
     for m in manifests:
         for k, v in m["counters"].items():
             totals[k] = totals.get(k, 0) + int(v or 0)
-    return {"batches": manifests, "totals": totals, "executed_now": executed}
+    return {"batches": manifests, "totals": totals, "executed_now": len(pending)}
 
 
 def read_multiplexed(spark: SparkSession, root: str) -> DataFrame:

@@ -207,6 +207,27 @@ def test_grid_detects_hole_and_thin_day(spark, tmp_path):
     assert r["n_missing"] == 1 and r["n_underfilled"] == 1
 
 
+def test_grid_spans_past_400_days_both_engines(spark, tmp_path):
+    """Full feed on days 0-399, nothing on days 400-449, events again on
+    day 450: the grid covers all 451 days, so the 50-day gap is found."""
+    import duckdb
+
+    from pdf_extractor_spark.queries import ORACLE_INGEST_COMPLETENESS_GRID
+
+    base = datetime.datetime(2024, 3, 4, 10, 0)
+    ev = [(d + 1, d % 9, "view", base + datetime.timedelta(days=d))
+          for d in (*range(400), 450)]
+    _write_events(spark, tmp_path, ev)
+    got = tuple(q_ingest_completeness_grid(spark, str(tmp_path)).collect()[0])
+    con = duckdb.connect()
+    con.sql("CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet/*.parquet')")
+    want = tuple(con.sql(ORACLE_INGEST_COMPLETENESS_GRID).fetchall()[0])
+    assert got == want == _grid_ref(ev)
+    assert got[:2] == (451, 50)
+    assert got[-1] == "holes_found"
+
+
 # ------------------------------------------------ distance concentration
 
 

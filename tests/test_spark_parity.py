@@ -188,34 +188,6 @@ def _final_write_plans(spark, description, n):
 
 
 class TestResume:
-    def test_kill_and_resume_no_duplicates(self, spark, transcripts, tmp_path):
-        root = str(tmp_path / "resume")
-        with pytest.raises(RuntimeError, match="simulated kill"):
-            run_extraction(
-                spark, transcripts, root,
-                buckets=8, buckets_per_batch=2, fail_after_batches=2,
-            )
-        partial = len(
-            __import__("pdf_extractor_spark.plans.pipeline", fromlist=["committed_batches"])
-            .committed_batches(root)
-        )
-        assert partial == 2
-
-        summary = run_extraction(
-            spark, transcripts, root, buckets=8, buckets_per_batch=2
-        )
-        assert summary["executed_now"] == 2  # only the missing batches ran
-
-        got = _rows_as_dicts(read_chunks(spark, root), CHUNK_COLS)
-        want = _golden_as_lists(_golden("chunks"), CHUNK_COLS)
-        assert got == want  # byte-identical, no dups, nothing missing
-
-        # a third run is a no-op
-        summary2 = run_extraction(
-            spark, transcripts, root, buckets=8, buckets_per_batch=2
-        )
-        assert summary2["executed_now"] == 0
-
     def test_disjoint_bucket_ranges_compose(self, spark, transcripts, tmp_path):
         """Multi-executor work split: two runs over disjoint bucket ranges
         commit into the SAME root (bucket-derived batch ids never collide)
@@ -306,6 +278,11 @@ class TestPipelinedCommits:
         got = _rows_as_dicts(read_chunks(spark, root), CHUNK_COLS)
         want = _golden_as_lists(_golden("chunks"), CHUNK_COLS)
         assert got == want  # byte-identical, no dups, nothing missing
+
+        # a third run is a no-op
+        again = run_extraction(spark, transcripts, root,
+                               buckets=8, buckets_per_batch=2)
+        assert again["executed_now"] == 0
 
     def test_out_of_order_commits_return_batches_in_id_order(
         self, spark, transcripts, tmp_path
